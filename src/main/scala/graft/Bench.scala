@@ -206,18 +206,17 @@ object Bench {
 
     val (cands, tCands) = timed {
       // flagship path: station-aware candidates (J4/J5 + statsimi).
-      // localCheckpoint: the cands DAG (kring explode x edge cells x
+      // boundary: the cands DAG (kring explode x edge cells x
       // station simi joins) is referenced by the solve AND the join-backs;
       // truncating keeps downstream AQE plan strings bounded.
       val c0 = Matcher.buildCandsWithStations(spark, t.stops, edgesR,
         stationsR, cfg,
         maxAbsLat = Some(math.max(math.abs(bbox.latMin), math.abs(bbox.latMax))))
       // lazy: the count() below is the materializing action — an eager
-      // checkpoint would run the identical work as its own job and then
-      // pay a second scheduler round-trip for the count
-      val c = (if (distBuild) graft.router.DistGraphBuild.tagCands(c0, edgesR)
-               else c0)
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      // boundary would run the identical work as its own job and then pay
+      // a second scheduler round-trip for the count
+      val c = graft.plans.Boundary.lazily(
+        if (distBuild) graft.router.DistGraphBuild.tagCands(c0, edgesR) else c0)
       c.count(); c
     }
     phases += ("cands_join" -> tCands)

@@ -144,14 +144,14 @@ object AnnOps {
     import vectors.sparkSession.implicits._
     val q = queries.select($"vec_id".as("q"), $"embedding".as("qv"),
       norm($"embedding").as("qn"))
-    // anchors behind a lazy checkpoint: the K-row table feeds BOTH the
+    // anchors behind a lazy boundary: the K-row table feeds BOTH the
     // probe selection and the corpus assignment, and the two broadcast
     // subtrees are NOT exchange-reused at runtime (verified on the
     // executed plan: two TakeOrderedAndProject corpus passes) — at corpus
     // scale that is a full second scan just to re-derive K rows. The
     // first consumer materializes the blocks; both broadcasts then build
     // from them. Deterministic input -> identical values.
-    val anch = graft.plans.PlanAudit.cpLazy(ivfAnchors(vectors, k))
+    val anch = graft.plans.Boundary.lazily(ivfAnchors(vectors, k))
     val wp = Window.partitionBy($"q").orderBy($"acos".desc, $"list_id")
     val probes = q.crossJoin(broadcast(anch))
       .withColumn("acos", round(dot($"qv", $"av") / ($"qn" * $"an"), 4))

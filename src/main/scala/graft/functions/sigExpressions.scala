@@ -87,6 +87,8 @@ object SigOps {
 case class MinhashSigs(child: Expression, numHashes: Int, prime: Long)
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  // null on an empty gram array, also for a non-nullable child
+  override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "minhash_sigs"
   override protected def nullSafeEval(a: Any): Any = {
@@ -106,6 +108,8 @@ case class MinhashSigs(child: Expression, numHashes: Int, prime: Long)
 /** simhash_bits(hashes) -> long: the `bits`-bit SimHash vote. */
 case class SimhashBits(child: Expression, bits: Int) extends UnaryExpression {
   override def dataType: DataType = LongType
+  // null on an empty gram array, also for a non-nullable child
+  override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "simhash_bits"
   override protected def nullSafeEval(a: Any): Any = {
@@ -124,6 +128,8 @@ case class SimhashBits(child: Expression, bits: Int) extends UnaryExpression {
 case class GramFingerprint(child: Expression, prime: Long)
     extends UnaryExpression {
   override def dataType: DataType = LongType
+  // null on an empty gram array, also for a non-nullable child
+  override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "gram_fingerprint"
   override protected def nullSafeEval(a: Any): Any = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions._
 import graft.geo.Geo
+import graft.plans.Boundary
 
 /** OSM -> routable transit graph as a declarative DataFrame DAG — the Spark
   * recast of the reference's 4-pass streaming OsmBuilder
@@ -254,9 +255,8 @@ object GraphBuilder {
                   cfgs: Seq[(String, OsmConfig)]): Map[String, GraphTables] = {
     import spark.implicits._
     val merged = OsmConfig.mergeForGraph(cfgs.map(_._2))
-    val ways = pruneTags(osmWaysRaw, merged)
-      .filter(tagMatches($"tags", merged.keepWays))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val ways = Boundary.eagerly(pruneTags(osmWaysRaw, merged)
+      .filter(tagMatches($"tags", merged.keepWays)))
     // shared node checkpoint restricted to nodes any MOT build can touch:
     // members of the union-kept ways (edge geometry) plus nodes with a
     // surviving tag (station/blocker/turn-cycle/nohup rules all match on
@@ -268,10 +268,9 @@ object GraphBuilder {
       .filter($"lat" >= bbox.latMin && $"lat" <= bbox.latMax &&
               $"lon" >= bbox.lonMin && $"lon" <= bbox.lonMax)
     val wayMembers = ways.select(explode($"nodes").as("id")).distinct()
-    val nodes = bboxN.filter($"tags".isNotNull && size($"tags") > 0)
+    val nodes = Boundary.eagerly(bboxN.filter($"tags".isNotNull && size($"tags") > 0)
       .unionByName(bboxN.filter($"tags".isNull || size($"tags") === 0)
-        .join(wayMembers, Seq("id"), "left_semi"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .join(wayMembers, Seq("id"), "left_semi")))
     cfgs.map { case (name, cfg) =>
       name -> build(spark, nodes, ways, osmRels, bbox, cfg)
     }.toMap
@@ -359,22 +358,19 @@ object GraphBuilder {
       .select($"id".as("node_id"))
 
     // ---- G8 collapseEdges: contract deg-2 chains within each way ----
-    // localCheckpoint: fixGaps consumes this subtree 5 ways (degree agg,
-    // both ring-join sides, two endpoint-mapping joins) — a cache avoids
+    // boundary: fixGaps consumes this subtree 5 ways (degree agg, both
+    // ring-join sides, two endpoint-mapping joins) — a cache avoids
     // recompute but leaves the posexplode+join+window diamond in every
-    // consumer's plan STRING (5x duplicated, ~176k chars); the checkpoint
+    // consumer's plan STRING (5x duplicated, ~176k chars); the boundary
     // truncates it.
     // Break at turn cycles + station nodes + blockers: StationSnap's
     // eq/blocker walks and the turn cost oracle need them addressable.
     val stationNodeIds = bboxNodes.filter(tagMatches($"tags", cfg.stationRules))
       .select($"id".as("node_id"))
     val breakNodes = turnCycles.unionByName(stationNodeIds).unionByName(blockers)
-    // LAZY: localCheckpoint persists immediately, so the first consuming
-    // action (fixGaps' pair check) materializes the blocks and every later
-    // reference reads them — one dedicated materialization job less; all
-    // consumers run sequentially on the driver (same safety argument as
-    // Matcher.checkpointSerLazy).
-    val contracted0 = contractDeg2Chains(edgesCost, breakNodes).localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // lazy: the first consuming action (fixGaps' pair check) writes the
+    // blocks and every later reference reads them
+    val contracted0 = Boundary.lazily(contractDeg2Chains(edgesCost, breakNodes))
 
     // ---- G8 fixGaps: 1 m endpoint merge of degree-1 nodes ----
     val contracted = fixGaps(contracted0)
@@ -385,7 +381,7 @@ object GraphBuilder {
     // ShapeBuilder.cpp:287-316; a distributed labeling here paid O(log n)
     // join rounds per build for a property of the bounded dimension table)
     //
-    // localCheckpoint: the build DAG is a DIAMOND (edgesCost feeds the
+    // boundary: the build DAG is a DIAMOND (edgesCost feeds the
     // degree agg twice + the chain labeling; contracted0 feeds fixGaps 5
     // ways) and every downstream consumer re-references the shared
     // subtrees. Plan STRINGS expand shared subtrees per reference —
@@ -396,8 +392,8 @@ object GraphBuilder {
     // geomCover: bbox + cover in one codegen'd pass (was four interpreted
     // transform/array_min/array_max passes feeding CodegenFallback
     // CellsCover — the dominant task time of this checkpoint job)
-    val edges = contracted.withColumn("cells", geomCover($"geom", cfg.cellRes))
-      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val edges = Boundary.lazily(
+      contracted.withColumn("cells", geomCover($"geom", cfg.cellRes)))
 
     // ---- station nodes (F4 station predicate); names via F6 deep attr
     // extraction: own name, else the name of a containing relation (e.g. a

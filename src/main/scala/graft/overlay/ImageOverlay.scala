@@ -48,10 +48,9 @@ object ImageOverlay {
   def assign(images: DataFrame, shapes: DataFrame, res: Int): DataFrame = {
     import images.sparkSession.implicits._
     // the (shape_id, cell) set feeds BOTH the broadcast cell prune and the
-    // pair join; without the (lazy) checkpoint the gcell+distinct shuffle
-    // over every shape point runs twice per action
-    val sc = shapeCells(shapes, res)
-      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // pair join; without the boundary the gcell+distinct shuffle over
+    // every shape point runs twice per action
+    val sc = graft.plans.Boundary.lazily(shapeCells(shapes, res))
     val liveCells = broadcast(sc.select($"cell").distinct())
     tileCells(images)
       .join(liveCells, Seq("cell"))

@@ -10,19 +10,6 @@ import org.apache.spark.sql.functions._
   * is the scale path for graphs too large to collect. */
 object ConnectedComponents {
 
-  /** The RDD a localCheckpoint actually persisted: Dataset.unpersist goes
-    * through the CacheManager, which does NOT track checkpoint blocks, so
-    * freeing a consumed round's state needs the LogicalRDD's own RDD.
-    * Without this, every round's step1/newLabels blocks (O(V) each) lived
-    * until the ContextCleaner happened to GC the dropped references — at
-    * 10^9-node graphs that is rounds x label-table of block storage held
-    * for the whole run. */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
-
   /** edges(a, b) undirected -> (node, comp) with comp = min reachable id.
     * Convergence (changed == 0) is guaranteed within maxRounds for
     * diameters the pointer jumping can halve down in that many rounds;
@@ -43,30 +30,27 @@ object ConnectedComponents {
       // propagate: comp via neighbors
       val viaNeighbors = sym.join(labels.withColumnRenamed("node", "b"), Seq("b"))
         .select($"a".as("node"), $"comp")
-      // LAZY local checkpoints: the round's single action (the `changed`
-      // count below) materializes both — one scheduler round-trip per
-      // round instead of three. The checkpoint still cuts lineage and
-      // avoids self-join attribute ambiguity (the DataFrame is re-rooted
-      // at marking time, not at materialization); the deterministic
-      // min-aggregate makes a concurrent first-touch recompute harmless.
-      val step1 = labels.unionByName(viaNeighbors)
-        .groupBy($"node").agg(min($"comp").as("comp"))
-        .localCheckpoint(false)
+      // lazy boundaries: the round's single action (the `changed` count
+      // below) materializes both. They cut the lineage, which otherwise
+      // grows every round, and avoid self-join attribute ambiguity (the
+      // DataFrame is re-rooted at marking time, not at materialization).
+      val step1 = Boundary.lazily(labels.unionByName(viaNeighbors)
+        .groupBy($"node").agg(min($"comp").as("comp")))
       // pointer jumping: comp -> comp(comp)
       val right = step1.select($"node".as("jnode"), $"comp".as("comp2"))
       val jumped = step1
         .join(right, step1("comp") === right("jnode"), "left_outer")
         .select(step1("node"), coalesce(least(step1("comp"), right("comp2")),
           step1("comp")).as("comp"))
-      val newLabels = jumped.localCheckpoint(false)
+      val newLabels = Boundary.lazily(jumped)
       changed = newLabels.as("n").join(labels.as("o"), Seq("node"))
         .filter(col("n.comp") =!= col("o.comp")).count()
       // after the count, newLabels holds the round's whole state: free the
-      // consumed inputs at block level — the Dataset-level unpersist (kept
-      // for the round-0 cached labels) is a no-op for checkpoint blocks
+      // consumed inputs now, not at the next GC (the Dataset-level
+      // unpersist is for the round-0 cached labels)
       labels.unpersist()
-      checkpointRdd(labels).foreach(_.unpersist(false))
-      checkpointRdd(step1).foreach(_.unpersist(false))
+      Boundary.release(labels, by = newLabels)
+      Boundary.release(step1, by = newLabels)
       labels = newLabels
       round += 1
     }

@@ -32,11 +32,10 @@ object BenchExtra {
 
     val all = graft.queries.GraftQueries.all
     if (args.headOption.contains("explain")) {
-      // dump the full operator tree: without this the sortedBy
-      // materialization boundary roots the visible plan at an ExistingRDD
-      // scan (see GraftQueries.sortedBy — the executed plan differs only
-      // by that lazy checkpoint directly under the final Sort)
-      graft.queries.GraftQueries.PlanDumpEverything = true
+      // dump the full operator tree: without this the boundaries root the
+      // visible plan at an ExistingRDD scan (the executed plan differs by
+      // the boundaries only: under the final Sort and inside dedup/ANN)
+      graft.plans.Boundary.audit = true
       val outDir = new java.io.File(args(1))
       outDir.mkdirs()
       val names = if (args.length > 2) args.drop(2).toSeq else all.keys.toSeq.sorted

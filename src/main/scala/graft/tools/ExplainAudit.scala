@@ -21,13 +21,9 @@ object ExplainAudit {
       .config("spark.sql.maxPlanStringLength", "1048576").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GeoFunctions.register(spark)
-    // audit mode: skip every materialization boundary (the sortedBy
-    // checkpoint and the dedup/ANN internal checkpoints) so the FULL
-    // logical tree is visible to the pattern checks — the boundaries
-    // otherwise root the plan at an ExistingRDD scan and hide exactly
-    // the join shapes this audit exists to verify
-    graft.queries.GraftQueries.PlanDumpEverything = true
-    graft.plans.PlanAudit.NoBoundaries = true
+    // audit mode: the boundaries would otherwise root the plan at an
+    // ExistingRDD scan and hide exactly the join shapes this audit checks
+    graft.plans.Boundary.audit = true
     val dir = "/root/testdata/sf0.001"
     var failures = 0
 

@@ -40,11 +40,11 @@ object LocalityProbe {
           new java.net.URI(if (p.startsWith("file:")) p else "file://" + p).getPath).length
         case _ => 0L
       }
-      val cands = graft.router.DistGraphBuild.tagCands(
+      val cands = graft.plans.Boundary.eagerly(graft.router.DistGraphBuild.tagCands(
         graft.router.Matcher.buildCandsWithStations(spark, t.stops, dist.edges,
-          dist.stations, cfg), dist.edges).localCheckpoint()
-      val keyed = graft.router.Matcher.tripStopsWithKey(
-        graft.fixtures.WorldTables.tripStops(t)).localCheckpoint()
+          dist.stations, cfg), dist.edges))
+      val keyed = graft.plans.Boundary.eagerly(graft.router.Matcher.tripStopsWithKey(
+        graft.fixtures.WorldTables.tripStops(t)))
 
       def run(locality: Boolean): Map[String, Set[Int]] = {
         graft.router.Matcher.BinLocalityDisabled = !locality

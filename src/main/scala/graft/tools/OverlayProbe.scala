@@ -41,7 +41,7 @@ object OverlayProbe {
           .select($"trip_id".as("shape_id"), $"seq", $"lat", $"lng")
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"shape_id").orderBy($"seq")
-        val shapes = ts
+        val shapes = graft.plans.Boundary.eagerly(ts
           .withColumn("lat2", lead($"lat", 1).over(w))
           .withColumn("lng2", lead($"lng", 1).over(w))
           .select($"shape_id", $"seq", $"lat", $"lng", $"lat2", $"lng2",
@@ -52,9 +52,7 @@ object OverlayProbe {
             when($"lat2".isNotNull, $"lat" + ($"lat2" - $"lat") * $"k" / (densify + 1))
               .otherwise($"lat").as("lat"),
             when($"lng2".isNotNull, $"lng" + ($"lng2" - $"lng") * $"k" / (densify + 1))
-              .otherwise($"lng").as("lng"))
-          .localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+              .otherwise($"lng").as("lng")))
         val nPts = shapes.count()
 
         // JIT/codegen warm at this shape, small world not needed: one

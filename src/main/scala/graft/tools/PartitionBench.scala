@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.fixtures.{SyntheticWorld, WorldTables}
 import graft.osm.{GraphBuilder, OsmConfig}
+import graft.plans.Boundary
 import graft.router.{CompactGraph, GraphPartitions, Matcher}
 
 /** Evidence for the component-partitioned graph broadcast (SURVEY §7.3):
@@ -48,9 +49,9 @@ object PartitionBench {
     gt.edges.cache().count()
     val graph = CompactGraph.fromEdges(gt.edges, gt.restrictions,
       gt.wayLines, gt.transitLines, gt.turnCycles)
-    val cands = Matcher.buildCandsWithStations(spark, t.stops, gt.edges,
-      gt.stations, cfg).localCheckpoint()
-    val keyed = Matcher.tripStopsWithKey(WorldTables.tripStops(t)).localCheckpoint()
+    val cands = Boundary.eagerly(Matcher.buildCandsWithStations(spark, t.stops, gt.edges,
+      gt.stations, cfg))
+    val keyed = Boundary.eagerly(Matcher.tripStopsWithKey(WorldTables.tripStops(t)))
 
     val parts = GraphPartitions.build(spark, graph,
       minBinEdges = math.max(64, graph.numEdges / (4 * cities)))

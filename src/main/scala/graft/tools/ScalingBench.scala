@@ -168,7 +168,7 @@ object ScalingBench {
   /** One measured pipeline run: cold caches, warm JIT. */
   def jobStage(spark: SparkSession, rows: Int, cols: Int, tpr: Int): JobSample = {
     spark.catalog.clearCache()
-    // clearCache() frees SQL-cached plans only — localCheckpoint blocks
+    // clearCache() frees SQL-cached plans only — Boundary blocks
     // live as persistent RDDs until the DRIVER garbage-collects the RDD
     // references and the ContextCleaner broadcasts removal, which a 48g
     // rarely-collecting driver never does mid-bench. Left in place, the

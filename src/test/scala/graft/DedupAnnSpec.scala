@@ -12,6 +12,8 @@ import graft.dedup.DedupOps
   * the semantics locally (identical docs collide everywhere, disjoint docs
   * nowhere, exact cosine values on constructed vectors) so a plan rewrite
   * that changes results fails in `sbt test` before it reaches the oracle. */
+case class SigDoc(doc_id: Long, text: String)
+
 class DedupAnnSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -126,13 +128,22 @@ class DedupAnnSpec extends AnyFunSuite {
     // sentinel signature that would make all bigram-less docs collide
     val B = org.apache.spark.sql.graftbridge.ColumnBridge
     val hashes = graft.text.TextOps.bigramHashes($"text", distinct = true)
-    val sigs = d.select($"doc_id",
+    def sigNulls(df: DataFrame): Map[Long, (Boolean, Boolean, Boolean)] = df.select($"doc_id",
       B.column(graft.functions.MinhashSigs(B.expression(hashes), 8, DedupOps.MinhashPrime)).as("mh"),
       B.column(graft.functions.SimhashBits(B.expression(hashes), 16)).as("sh"),
       B.column(graft.functions.GramFingerprint(B.expression(hashes), 1000000007L)).as("fp"))
       .collect().map(r => r.getLong(0) -> (r.isNullAt(1), r.isNullAt(2), r.isNullAt(3))).toMap
-    assert(sigs(0L) == ((true, true, true)) && sigs(1L) == ((true, true, true)))
-    assert(sigs(2L) == ((false, false, false)))
+    val expected = Map(0L -> ((true, true, true)), 1L -> ((true, true, true)),
+      2L -> ((false, false, false)))
+    assert(sigNulls(d) == expected)
+    // the same on the codegen path over a NON-nullable child, as in the
+    // production plans (their physical isnotnull(text) filter outputs text
+    // as non-nullable); an RDD-backed frame keeps the optimizer from
+    // folding the projection into a local relation
+    val nonNull = spark.sparkContext.parallelize(Seq(SigDoc(0L, "solo"), SigDoc(1L, ""),
+      SigDoc(2L, "a b"))).toDS().toDF().filter($"text".isNotNull)
+    assert(!nonNull.queryExecution.sparkPlan.schema("text").nullable)
+    assert(sigNulls(nonNull) == expected)
   }
 
   test("simhash: identical equal, disjoint differ, 16-bit range") {

@@ -14,6 +14,8 @@ object SparkTestSession {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a codegen compile failure fails the test instead of falling back
+      .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     GeoFunctions.register(s)

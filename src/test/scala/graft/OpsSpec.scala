@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.StringSim
-import graft.plans.{ConnectedComponents, Snapshots}
+import graft.plans.{Boundary, ConnectedComponents, Snapshots}
 
 class StringSimSpec extends AnyFunSuite {
   test("normalizer: ordered regex chain, lowercase, memo") {
@@ -71,6 +71,23 @@ class PlansSpec extends AnyFunSuite {
     assert(labels.count() == 40)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.size <= 1, s"per-round checkpoint blocks leaked: $leaked")
+  }
+
+  test("boundary release refuses to free blocks before the consumer is materialized") {
+    def rdd(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+    val consumed = Boundary.lazily(spark.range(0, 100, 1, 4).toDF("id"))
+    // the blocks are labeled with the caller's line, not the helper's
+    assert(rdd(consumed).toString.contains("localCheckpoint at OpsSpec.scala"),
+      rdd(consumed).toString)
+    val next = Boundary.lazily(consumed.groupBy(($"id" % 10).as("k")).count())
+    val e = intercept[IllegalStateException](Boundary.release(consumed, by = next))
+    assert(e.getMessage.contains("OpsSpec.scala"), e.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.contains(rdd(consumed).id))
+    assert(next.count() == 10)
+    Boundary.release(consumed, by = next)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rdd(consumed).id))
+    assert(next.count() == 10)
   }
 
   test("snapshots: stage computes once, resumes from manifest") {

@@ -43,6 +43,23 @@ class OracleParitySpec extends AnyFunSuite {
     }
   }
 
+  test("every boundary in the catalog queries honours the audit switch") {
+    def hasBoundary(df: DataFrame): Boolean = df.queryExecution.analyzed.exists {
+      case _: org.apache.spark.sql.execution.LogicalRDD => true
+      case _ => false
+    }
+    val catalog = graft.queries.GraftQueries.all
+    assert(catalog.size == 29)
+    graft.plans.Boundary.audit = true
+    try {
+      val withBoundary = catalog.keys.toSeq.sorted
+        .filter(name => hasBoundary(catalog(name)._1(spark, dir)))
+      assert(withBoundary.isEmpty, s"boundaries left in audit mode: $withBoundary")
+    } finally graft.plans.Boundary.audit = false
+    // with the switch off, a sortedBy query reads its rows from a boundary
+    assert(hasBoundary(catalog("q_dist_join")._1(spark, dir)))
+  }
+
   for ((name, sql) <- graft.queries.GraftQueries.oracleSql.toSeq.sortBy(_._1)) {
     test(s"oracle parity: $name") {
       registered
