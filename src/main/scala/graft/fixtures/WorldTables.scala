@@ -1,6 +1,7 @@
 package graft.fixtures
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.broadcast
 
 /** SyntheticWorld -> Spark DataFrames.
   *
@@ -62,8 +63,11 @@ object WorldTables {
   /** J7: trip_id -> ordered stop rows with coordinates + line identity. */
   def tripStops(t: Tables): DataFrame = {
     import t.stopTimes.sparkSession.implicits._
+    // broadcast: stops are bounded by the feed, not by trips, and these RDD
+    // scans carry no size statistics, so the planner would otherwise
+    // shuffle every stop_times row by stop_id to attach coordinates
     t.stopTimes
-      .join(t.stops.select($"stop_id", $"name".as("stop_name"), $"lat", $"lng"),
+      .join(broadcast(t.stops.select($"stop_id", $"name".as("stop_name"), $"lat", $"lng")),
         Seq("stop_id"))
       .join(t.trips.select($"trip_id", $"trip_short_name".as("line_name")), Seq("trip_id"))
       .select($"trip_id", $"seq", $"stop_id", $"arr_s", $"dep_s", $"lat", $"lng",

@@ -21,9 +21,9 @@ import graft.plans.Boundary
   * The road graph is broadcast as a compact primitive-array structure (the
   * reference holds the same graph fully in RAM single-node; per-MOT + bbox
   * filtering bounds it — SURVEY §7.3). Identical-sequence dedup makes kernel
-  * work proportional to DISTINCT sequences; the join-back is a plain
-  * shuffle join on seq_key that AQE skew-splits if one sequence has
-  * thousands of trips.
+  * work proportional to DISTINCT sequences; the join-back joins one
+  * member-trip list per sequence and explodes it, so a sequence shared by
+  * thousands of trips is still one join row.
   */
 object Matcher {
 
@@ -206,28 +206,19 @@ object Matcher {
   def matchTripsFull(spark: SparkSession, tripStops: DataFrame, cands: DataFrame,
                      parts: GraphPartitions, cfg: OsmConfig): MatchResult = {
     import spark.implicits._
-    // Two slim materializations instead of one heavy one: the old flow
-    // checkpointed the per-TRIP keyed table (every trip's stops array =
-    // ~15x the distinct payload at high trips-per-route) and then shuffled
-    // ALL of it again through dropDuplicates. Now the per-trip table only
-    // ever exists as (trip_id, seq_key) — the stops arrays are re-built
-    // for ONE representative trip per distinct sequence (1/dup-factor of
-    // the rows), at the cost of a second pass over the tripStops source
-    // (scans are cheap and pruned; wide shuffles are not).
-    // boundaries (not cache) on both: a cache leaves the full upstream
-    // lineage in every consumer's plan string (AQE re-renders it per
-    // update), a boundary truncates it.
     val (seqKeys, distinctSeqs) = tripSeqTables(tripStops)
     // boundary: the kernel output feeds shapes, anchors, hops, the color
     // ops, the eval and the overlay — truncating the logical lineage here
     // keeps every downstream plan shallow (deep lineage made AQE's
     // per-update plan stringification quadratic)
-    // EAGER on purpose (unlike the slim seq tables above): the solve must
-    // run as its own dedicated job so the kernel has every core and the
+    // EAGER on purpose: the solve runs as its own job, so the
     // KernelNanos/KernelCpuNanos wall-vs-CPU diagnostics measure the
     // kernel, not co-scheduled join/explode tasks of a fused job (a lazy
     // checkpoint here inflated summed in-solve wall ~100x at local[32]
-    // with identical CPU and iteration counts)
+    // with identical CPU and iteration counts). It does NOT get every
+    // core: AQE coalesces a small cogroup input to few partitions (one on
+    // perfbench match-dense), and spreading the groups wider only made
+    // concurrent groups duplicate HopCache computes, at no wall-time gain.
     val solved = Boundary.eagerly(solveSeqs(spark, distinctSeqs,
       cands, parts, cfg))
 
@@ -236,16 +227,19 @@ object Matcher {
     // separately for each of the three outputs shuffled that payload three
     // times — jstack'd as the dominant cost of the whole match stage at
     // high core counts. But CHECKPOINTING the join output was worse at
-    // high trip counts: the join duplicates each sequence's payload to
-    // every trip sharing it (~15x at tpr=3600), so the eager checkpoint
-    // wrote gigabytes a caller consuming only `shapes` never reads. Both
-    // join inputs are checkpointed, so re-running the join per consumed
-    // output costs one small shuffle of the 10^3-row pre-duplication
-    // payload — the duplication stays in-flight, never materialized.
+    // high trip counts: exploding the member lists duplicates each
+    // sequence's payload to every trip sharing it (~15x at tpr=3600), so
+    // the eager checkpoint wrote gigabytes a caller consuming only
+    // `shapes` never reads. Both join inputs are one row per distinct
+    // sequence and checkpointed, so re-running the join per consumed
+    // output costs one small shuffle of the pre-duplication payload — the
+    // duplication stays in-flight, never materialized.
     // The W2 cumulative measure is accumulated in the kernel during
     // geometry materialization (same haversine running sum the window
     // computed — without a 10^7-row sort).
     val joined = seqKeys.join(solved, Seq("seq_key"))
+      .select(explode($"trip_ids").as("trip_id"), $"lats", $"lngs", $"dists",
+        $"anchors", $"hops")
     // arrays_zip at EXPLODE time only — the structs exist transiently in
     // codegen; the shuffled/checkpointed payload stays flat primitives
     val shapes = joined
@@ -327,32 +321,27 @@ object Matcher {
       .drop("t0")
   }
 
-  /** The two tables the matcher actually needs, each materialized SLIM:
-    *  - seqKeys(trip_id, seq_key) — the full per-trip table, two string
-    *    columns only (the old flow checkpointed every trip's stops array
-    *    here: ~15x the distinct payload at high trips-per-route, written
-    *    once and shuffled again by dropDuplicates);
+  /** The two tables the matcher needs, one row per distinct sequence each,
+    * from ONE lazy boundary over ONE pass of the tripStops source:
+    *  - seqKeys(seq_key, trip_ids) — the member trips, for the join-back;
     *  - distinctSeqs(seq_key, line_name, stops, from_name, to_name) — the
-    *    heavy stops arrays, built from ONE representative trip per
-    *    distinct sequence (deterministic min trip_id; dropDuplicates kept
-    *    an arbitrary partition-order row). Trips sharing a key differ only
-    *    by a constant time shift and the kernel is shift-invariant, so any
-    *    representative solves identically.
-    * Costs one extra pass over the tripStops source — scans are pruned
-    * and cheap, wide shuffles are not. */
+    *    solver input (distinctSeqGroups). */
   def tripSeqTables(tripStops: DataFrame): (DataFrame, DataFrame) = {
-    val ss = tripStops.sparkSession
-    import ss.implicits._
-    // seq_key depends on the collected stops array, but the projection
-    // drops the array post-agg — it exists only transiently per group,
-    // never in a shuffle file or checkpoint block
-    val seqKeys = Boundary.lazily(tripStopsWithKey(tripStops)
-      .select($"trip_id", $"seq_key"))
-    val reps = seqKeys.groupBy($"seq_key").agg(min($"trip_id").as("trip_id"))
-    val repRows = tripStops.join(reps.select($"trip_id"), Seq("trip_id"), "left_semi")
-    val distinctSeqs = Boundary.lazily(tripStopsWithKey(repRows)
-      .select($"seq_key", $"line_name", $"stops", $"from_name", $"to_name"))
-    (seqKeys, distinctSeqs)
+    val groups = Boundary.lazily(distinctSeqGroups(tripStopsWithKey(tripStops)))
+    (groups.select("seq_key", "trip_ids"), groups.drop("trip_ids"))
+  }
+
+  /** keyed (tripStopsWithKey rows) -> one row per seq_key: the payload of
+    * the member with the smallest trip_id (deterministic) and every
+    * member's trip_id. Trips sharing a key differ only by a constant time
+    * shift and the kernel solves on relative times, so any representative
+    * solves identically. */
+  def distinctSeqGroups(keyed: DataFrame): DataFrame = {
+    import keyed.sparkSession.implicits._
+    keyed.groupBy($"seq_key")
+      .agg(min_by(struct($"line_name", $"stops", $"from_name", $"to_name"),
+        $"trip_id").as("rep"), collect_list($"trip_id").as("trip_ids"))
+      .select($"seq_key", $"rep.*", $"trip_ids")
   }
 
   case class HopRow(hop_idx: Int, edge_ids: Array[Long], reachable: Boolean)
@@ -392,12 +381,8 @@ object Matcher {
     * the full graph. Single-bin partitionings degrade to exactly the old
     * full-graph broadcast. */
   def solveKeyedSeqs(spark: SparkSession, keyed: DataFrame, cands: DataFrame,
-                     parts: GraphPartitions, cfg: OsmConfig): DataFrame = {
-    import spark.implicits._
-    solveSeqs(spark, keyed.dropDuplicates("seq_key")
-      .select($"seq_key", $"line_name", $"stops", $"from_name", $"to_name"),
-      cands, parts, cfg)
-  }
+                     parts: GraphPartitions, cfg: OsmConfig): DataFrame =
+    solveSeqs(spark, distinctSeqGroups(keyed).drop("trip_ids"), cands, parts, cfg)
 
   /** Solve ALREADY-DISTINCT sequences (one row per seq_key). */
   def solveSeqs(spark: SparkSession, distinctSeqs0: DataFrame, cands: DataFrame,
@@ -437,13 +422,21 @@ object Matcher {
     // feed's route topology. The bounded prefix-sharing loss is recovered
     // hop-wise by the executor-global HopCache (same (cand, targets,
     // cutoff) memo hits across sub-groups of one physical cluster).
-    // cluster sizes on a SLIM projection (a window count over the full rows
+    // the cluster columns are on each sequence's own row, so ONE small
+    // aggregate yields size and lineTo set, broadcast back (a window count
     // would shuffle the heavy stops payload onto the very hot key being
-    // split); the per-cluster count table is tiny -> broadcast back
-    val slimKeys = distinctSeqs.select($"seq_key",
-      coalesce($"line_name", lit("")).as("c_line"),
-      coalesce(element_at($"stops", 1).getField("stop_id"), lit("")).as("c_stop"))
-    val clCounts = slimKeys.groupBy($"c_line", $"c_stop").agg(count(lit(1)).as("n_cl"))
+    // split). The lineTo set is computed on the UNSALTED key: sub-groups
+    // seeing only their own rows' to_names would get different
+    // RoutingAttrs identities (different line-surcharge arrays and
+    // hop-memo ctx), so a cluster's routing would vary with the salt
+    // partition and the HopCache hit recovery across sub-groups would
+    // vanish for multi-terminal lines
+    val clustered = distinctSeqs
+      .withColumn("c_line", coalesce($"line_name", lit("")))
+      .withColumn("c_stop", coalesce(element_at($"stops", 1).getField("stop_id"), lit("")))
+    val clCounts = clustered.groupBy($"c_line", $"c_stop")
+      .agg(count(lit(1)).as("n_cl"),
+        sort_array(collect_set(coalesce($"to_name", lit("")))).as("cl_to_names"))
     // PARALLELISM-AWARE GRAIN: splitting a cluster is not free — each
     // salted sub-group that lands on a different executor JVM recomputes
     // that cluster's hop memo (measured: 2.97x duplicated memo computes at
@@ -459,10 +452,10 @@ object Matcher {
     // clCounts is one row per cluster and broadcast-joined below anyway;
     // collecting it once yields the total without recomputing the dedup
     // subtree for a second action. CEILING: one row per (line, first-stop)
-    // cluster — bounded by the feed's route topology, not by trips; a
-    // whole-planet GTFS aggregate is ~10^5-10^6 clusters (few MB), so
-    // this collect never becomes the driver bottleneck the edge tables
-    // were (those now stay distributed, DistGraphBuild)
+    // cluster plus its terminal names — bounded by the feed's route
+    // topology, not by trips; a whole-planet GTFS aggregate is ~10^5-10^6
+    // clusters (MBs), so this collect never becomes the driver bottleneck
+    // the edge tables were (those now stay distributed, DistGraphBuild)
     val clRows = clCounts.collect()
     val totalSeqs = clRows.iterator.map(_.getLong(2)).sum
     val clLocal = spark.createDataFrame(
@@ -471,25 +464,12 @@ object Matcher {
       math.max(1L, 4L * spark.sparkContext.defaultParallelism))
     val grain = math.max(MaxSeqsPerGroup.toLong,
       (totalSeqs + targetGroups - 1) / targetGroups).toDouble
-    val saltedKeys = slimKeys.join(broadcast(clLocal), Seq("c_line", "c_stop"))
+    val salted = clustered.join(broadcast(clLocal), Seq("c_line", "c_stop"))
       .withColumn("salt",
         pmod(xxhash64($"seq_key"),
           greatest(lit(1L), ceil($"n_cl" / lit(grain)).cast("long")))
           .cast("int"))
-      .select($"seq_key", $"c_line", $"c_stop", $"salt")
-    // the cluster's lineTo set is computed on the UNSALTED key and
-    // broadcast back to every salted sub-group: sub-groups seeing only
-    // their own rows' to_names would get different RoutingAttrs identities
-    // (different line-surcharge arrays and hop-memo ctx), so a cluster's
-    // routing would vary with the salt partition and the HopCache hit
-    // recovery across sub-groups would vanish for multi-terminal lines
-    val clToNames = slimKeys
-      .join(distinctSeqs.select($"seq_key", coalesce($"to_name", lit("")).as("tn")),
-        Seq("seq_key"))
-      .groupBy($"c_line", $"c_stop")
-      .agg(sort_array(collect_set($"tn")).as("cl_to_names"))
-    val seqRows = distinctSeqs.join(saltedKeys, Seq("seq_key"))
-      .join(broadcast(clToNames), Seq("c_line", "c_stop"))
+    val seqRows = salted
       .select($"c_line", $"c_stop", $"salt", $"seq_key", $"stops",
         coalesce($"from_name", lit("")).as("from_name"),
         $"cl_to_names")
@@ -507,10 +487,10 @@ object Matcher {
     // edge->bin broadcast map exists when bins were built executor-side
     val hasBin = cands.columns.contains("bin")
     val binCol = if (hasBin) col("bin").cast("int") else lit(-1)
-    val candRows = saltedKeys
-      .join(distinctSeqs.select($"seq_key",
-        explode(expr("transform(stops, s -> s.stop_id)")).as("stop_id")), Seq("seq_key"))
-      .select($"c_line", $"c_stop", $"salt", $"stop_id").distinct()
+    val candRows = salted
+      .select($"c_line", $"c_stop", $"salt",
+        explode(expr("transform(stops, s -> s.stop_id)")).as("stop_id"))
+      .distinct()
       .join(cands.select($"stop_id", $"edge_id", $"progr", $"pen10",
         $"py", $"px", $"oneway", binCol.as("bin")), Seq("stop_id"))
       .select($"c_line", $"c_stop", $"salt", $"stop_id", $"edge_id",

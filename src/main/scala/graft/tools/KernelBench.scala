@@ -31,8 +31,8 @@ object KernelBench {
       .map(r => (r.getString(0), (r.getLong(1), r.getDouble(2), r.getLong(3),
         r.getDouble(4), r.getDouble(5), r.getInt(6))))
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-    val seqs = Matcher.tripStopsWithKey(WorldTables.tripStops(t))
-      .dropDuplicates("seq_key").select($"seq_key", $"stops")
+    val seqs = Matcher.distinctSeqGroups(Matcher.tripStopsWithKey(WorldTables.tripStops(t)))
+      .select($"seq_key", $"stops")
       .as[(String, Seq[Matcher.TS])].collect()
     println(s"graph edges=${graph.numEdges} distinct seqs=${seqs.length}")
     spark.stop()

@@ -278,9 +278,9 @@ object ScalingBench {
         .map(r => (r.getString(0), (r.getLong(1), r.getDouble(2), r.getLong(3),
           r.getDouble(4), r.getDouble(5), r.getInt(6))))
         .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-      val seqs = graft.router.Matcher.tripStopsWithKey(
-          graft.fixtures.WorldTables.tripStops(t))
-        .dropDuplicates("seq_key").select($"seq_key", $"line_name", $"stops")
+      val seqs = graft.router.Matcher.distinctSeqGroups(graft.router.Matcher
+          .tripStopsWithKey(graft.fixtures.WorldTables.tripStops(t)))
+        .select($"seq_key", $"line_name", $"stops")
         .as[(String, String, Seq[graft.router.Matcher.TS])].collect()
       (graph, candMap, seqs)
     } finally spark.stop()

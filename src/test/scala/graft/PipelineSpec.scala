@@ -125,14 +125,60 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  // one min-trip_id payload per seq_key
   test("identical stop sequences solved once") {
     val ts = WorldTables.tripStops(t)
     val withKey = Matcher.tripStopsWithKey(ts)
-    val nTrips = withKey.count()
-    val nSeqs = withKey.dropDuplicates("seq_key").count()
-    // 2 trips per route share stops but differ in times; seq_key includes
-    // times -> per-route dedup only when times equal. Sanity: nSeqs <= nTrips
-    assert(nSeqs <= nTrips)
+    val (seqKeys, distinctSeqs) = Matcher.tripSeqTables(ts)
+    val keyOf = withKey.select($"trip_id", $"seq_key").as[(String, String)].collect().toMap
+    // every trip listed exactly once, under tripStopsWithKey's seq_key
+    val members = seqKeys.select(explode($"trip_ids").as("trip_id"), $"seq_key")
+      .as[(String, String)].collect()
+    assert(members.length == keyOf.size)
+    assert(members.toMap == keyOf)
+    // trips sharing a sequence exist, so the representative choice matters
+    assert(keyOf.values.toSet.size < keyOf.size)
+    // one payload row per key: the smallest member trip's keyed row
+    val payload = Seq("seq_key", "line_name", "stops", "from_name", "to_name").map(col)
+    val got = distinctSeqs.select(payload: _*).collect()
+    assert(got.map(_.getString(0)).toSet.size == got.length)
+    assert(got.map(_.getString(0)).toSet == keyOf.values.toSet)
+    val minTrip = keyOf.groupBy(_._2).map { case (_, m) => m.keys.min }.toSeq
+    val expect = withKey.filter($"trip_id".isin(minTrip: _*)).select(payload: _*).collect()
+    assert(got.toSet == expect.toSet)
+  }
+
+  /** Plans built with every boundary passed through (plan inspection) */
+  private def audited[T](f: => T): T = {
+    graft.plans.Boundary.audit = true
+    try f finally graft.plans.Boundary.audit = false
+  }
+
+  test("plan guard: keying scans the stop_times source once") {
+    // a source scan is identified by the RDD it reads (self-join
+    // deduplication re-instantiates the leaf with fresh attribute ids)
+    def scannedRdds(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collectLeaves().collect {
+        case e: org.apache.spark.sql.execution.ExternalRDD[_] => e.rdd.id
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }
+    val stopTimesRdd = scannedRdds(t.stopTimes).head
+    val (seqKeys, distinctSeqs) = audited(Matcher.tripSeqTables(WorldTables.tripStops(t)))
+    for (df <- Seq(seqKeys, distinctSeqs))
+      assert(scannedRdds(df).count(_ == stopTimesRdd) == 1, df.queryExecution.optimizedPlan)
+  }
+
+  test("plan guard: the solver input has no join keyed on seq_key") {
+    val parts = graft.router.GraphPartitions.build(spark,
+      CompactGraph.fromEdges(gt.edges, gt.restrictions))
+    val cands = Matcher.buildCands(spark, t.stops, gt.edges, cfg)
+    val solverIn = audited(Matcher.solveSeqs(spark,
+      Matcher.tripSeqTables(WorldTables.tripStops(t))._2, cands, parts, cfg))
+    val seqKeyJoins = solverIn.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join
+        if j.condition.exists(_.references.exists(_.name == "seq_key")) => j
+    }
+    assert(seqKeyJoins.isEmpty, seqKeyJoins.flatMap(_.condition).mkString("; "))
   }
 }
 
